@@ -21,6 +21,16 @@ object Bench {
   private[graft] def stealContended(stealPcts: Seq[Double]): Boolean =
     stealPcts.exists(_ > 0.05)
 
+  /** The longest prefix of `names` whose JSON array of quoted names
+    * fits in `budget` chars (counting a comma after every name).  It
+    * stops at the first name that does not fit, so the shown names stay
+    * the slowest-first prefix.
+    */
+  private[graft] def shownPrefix(names: Seq[String], budget: Int): Seq[String] = {
+    val lens = names.scanLeft(2)(_ + _.length + 3).tail
+    names.take(lens.takeWhile(_ <= budget).length)
+  }
+
   /** Cumulative steal jiffies across all cpus (USER_HZ = 100), -1 on
     * read failure.
     */
@@ -200,15 +210,8 @@ object Bench {
       .collect { case (k, ts) if isContended(ts) =>
         k -> median(ts.map(_._1)) }
       .sortBy(-_._2).map(_._1)
-    val contendedShown = {
-      val b = scala.collection.mutable.ListBuffer.empty[String]
-      var len = 2
-      contendedAll.foreach { k =>
-        if (len + k.length + 3 <= 400) { b += "\"" + k + "\""; len += k.length + 3 }
-      }
-      b.toList
-    }
-    val contendedJson = contendedShown.mkString("[", ",", "]")
+    val contendedShown = shownPrefix(contendedAll, 400)
+    val contendedJson = contendedShown.map("\"" + _ + "\"").mkString("[", ",", "]")
     val contendedOmitted = contendedAll.length - contendedShown.length
     def wrap(qs: String, omitted: Int) =
       f"""{"metric":"total","value":$total%.4f,"unit":"sec","total_min":$totalMin%.4f,"queries":$qs,"queries_omitted":$omitted,"contended":$contendedJson,"contended_omitted":$contendedOmitted,"stages":$stagesJson,"full":"$outPath","failed":$failedJson,"sf":"$sfDir"}"""

@@ -27,34 +27,6 @@ object Profile {
       r
     }
 
-    // ---- fit phases
-    val df = SparkEntry.lcgFrame(spark, sfDir).cache()
-    time("lcgFrame count (cache)")(df.count())
-    val stats = time("sufficientStats collect") {
-      graft.spark.WoeBinning.sufficientStats(df, "target", Seq("extendedprice"))
-    }
-    val s = stats("extendedprice")
-    println(s"[profile] distinct groups: ${s.groups.length}")
-    val cfgDefault = graft.core.WoeConfig(nThreshold = math.ceil(s.totalRows / 20.0))
-    val cfg300 = graft.core.WoeConfig(nThreshold = 300)
-    Seq(("kernels nThr=default(N/20)", cfgDefault), ("kernels nThr=300", cfg300))
-      .foreach { case (label, cfg) =>
-        time(label) {
-          val asc = graft.core.Kernels.detectOrder(s)
-          val gs = s.groups.map { case (v, cnt, t) =>
-            graft.core.GroupStat(v, cnt.toDouble, t.toDouble / cnt,
-              graft.core.Kernels.binaryStd(cnt, t))
-          }
-          val sorted = if (asc) gs else gs.reverse
-          val pooled = time(s"  monotonePool")(graft.core.Kernels.monotonePool(sorted))
-          println(s"[profile]   pooled groups: ${pooled.length}")
-          time(s"  significanceMerge") {
-            graft.core.Kernels.significanceMerge(pooled, cfg.nThreshold,
-              cfg.nOccurrences, cfg.pThreshold)
-          }.length
-        }
-      }
-
     // ---- minhash stages
     val docs = spark.read.parquet(s"$sfDir/documents.parquet").cache()
     time("documents count (cache)")(docs.count())
@@ -110,30 +82,6 @@ object Profile {
     }
     time("q_dedup_simhash full") {
       graft.ops.DedupOps.simhashPairs(docs, "text", "doc_id", maxHamming = 3).count()
-    }
-
-    // ---- apply phases
-    val m = time("fit 3 cols nThr=300") {
-      graft.spark.WoeBinning.fit(df, "target",
-        Seq("extendedprice", "quantity", "discount"),
-        graft.spark.WoeFitOptions(nThreshold = Some(300)))
-    }
-    time("transform count")(m.transform(df).count())
-    // transform sub-stages: the exact-median aggregate vs the when-chain
-    time("  medians job (3 cols)") {
-      df.agg(median(col("extendedprice")).as("m1"),
-        median(col("quantity")).as("m2"),
-        median(col("discount")).as("m3")).head()
-    }
-    time("  transform count 2nd (medians warm? no — recomputed)") {
-      m.transform(df).count()
-    }
-    // stats sub-stages: the groupBy agg alone vs the driver collect
-    locally {
-      val agg = graft.spark.WoeBinning.statsAggregation(df, "target", Seq("extendedprice"))
-      time("  statsAgg count only")(agg.count())
-      val rows = time("  statsAgg collect")(agg.collect())
-      time("  statsFromRows driver")(graft.spark.WoeBinning.statsFromRows(rows))
     }
 
     // ---- streaming fit (needs the testdata file layout — a ScaleUp

@@ -3,8 +3,7 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.core.WoeConfig
-import graft.spark.{WoeBinning, WoeBinningModel}
-import scala.collection.parallel.CollectionConverters._
+import graft.spark.{WoeBinning, WoeBinningModel, WoeFitOptions}
 
 /** Incremental WoE binning over a stream — a capability the
   * single-shot reference cannot express (SURVEY.md §2.10: no streaming
@@ -16,9 +15,10 @@ import scala.collection.parallel.CollectionConverters._
   * the updated stats on every trigger and hand the refreshed model to
   * the caller.
   *
-  * The melt/aggregation and rows→stats conversion are the SAME code as
-  * the batch fit (WoeBinning.statsAggregation / statsFromRows /
-  * fitOne), so streaming == batch equality holds by construction.
+  * The melt/aggregation, the Row collect and its decoder, and the
+  * stats → model body are the SAME code as the batch fit
+  * (WoeBinning.statsAggregation / statsFromRows / modelFromStats), so
+  * streaming == batch equality holds by construction.
   *
   * Scale note: state is O(distinct (variable, value)) and each trigger
   * collects it, like the batch path.  For unbounded-cardinality
@@ -84,6 +84,10 @@ object StreamingWoe {
     var writer = stats.writeStream.outputMode("complete")
     checkpointLocation.foreach(p => writer = writer.option("checkpointLocation", p))
     trigger.foreach(t => writer = writer.trigger(t))
+    // the caller's config as fit options, so the per-trigger refit runs
+    // the batch fit's stats → model body
+    val opts = WoeFitOptions(Some(cfg.nThreshold), cfg.nOccurrences,
+      cfg.pThreshold, sepValue, cfg.mergeThreshold, cfg.sortOverload)
     // the gate rides the existing per-trigger collect as a LIMIT — no
     // second pass over the state frame per micro-batch (a first cut
     // ran a per-batch groupBy(variable).count() and cost q_fit_streaming
@@ -98,17 +102,13 @@ object StreamingWoe {
         uncapped.size.toLong * (maxDistinctState + 1L)
     writer
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // typed collect (r19, same as the batch fit): tuple encoder
-        // instead of a GenericRow decode per grouped state row
-        import batch.sparkSession.implicits._
-        val typed = batch.as[WoeBinning.StatsTuple]
         val rows =
-          if (cap == Long.MaxValue) typed.collect()
-          else typed.limit(math.min(cap + 1, Int.MaxValue.toLong).toInt).collect()
+          if (cap == Long.MaxValue) batch.collect()
+          else batch.limit(math.min(cap + 1, Int.MaxValue.toLong).toInt).collect()
         if (rows.length > cap) {
           // name the dominant variable among the truncated rows — an
           // approximate culprit, but the throw itself is exact
-          val worst = rows.groupBy(_._1).maxBy(_._2.length)
+          val worst = rows.groupBy(_.getString(0)).maxBy(_._2.length)
           throw new IllegalStateException(
             s"fitStream: streaming state reached ${rows.length}+ grouped " +
               s"rows (cap $cap for ${uncapped.size} uncapped column(s) at " +
@@ -117,13 +117,10 @@ object StreamingWoe {
               "preBucketEdges for high-cardinality columns (fixed-edge " +
               "snap bounds complete-mode state) or raise maxDistinctState")
         }
-        val byVar = WoeBinning.statsFromTuples(rows)
-        if (byVar.nonEmpty) { // no data yet → no model to emit
-          val fitted = inputCols.par
-            .map(c => c -> WoeBinning.fitOne(c, targetCol, byVar, cfg, sepValue))
-            .seq.toVector
-          onModel(batchId, new WoeBinningModel(fitted))
-        }
+        val byVar = WoeBinning.statsFromRows(rows)
+        if (byVar.nonEmpty) // no data yet → no model to emit
+          onModel(batchId,
+            WoeBinning.modelFromStats(byVar, targetCol, inputCols, opts, None))
       }
       .start()
   }

@@ -2,6 +2,7 @@ package graft.spark
 
 import graft.core._
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import scala.collection.parallel.CollectionConverters._
@@ -38,71 +39,77 @@ final case class WoeFitOptions(
   */
 object WoeBinning {
 
-  /** The melt + exact-integer stats aggregation, shared by the batch
-    * fit and the streaming incremental fit (StreamingWoe).
+  /** `name` as a column reference taken literally: backtick-quoted, so
+    * dots, quotes and backslashes in a column name stay part of it.
     */
-  private def sqlStr(s: String): String = "'" + s.replace("'", "\\'") + "'"
-  private def sqlId(s: String): String = "`" + s.replace("`", "``") + "`"
+  private[spark] def colNamed(name: String): Column =
+    col("`" + name.replace("`", "``") + "`")
 
-  def statsAggregation(df: DataFrame, targetCol: String, inputCols: Seq[String]): DataFrame = {
+  /** The one melt of the fit and apply paths: each row becomes one
+    * (variable, value) row per input column, with `carry` alongside.
+    * The variable name is a literal, not spliced SQL, so any column name
+    * survives.  NaN and NULL are both "missing" (pandas dropna
+    * semantics): the value is NULL for either.
+    */
+  private def melt(df: DataFrame, inputCols: Seq[String], carry: Column*): DataFrame = {
     require(inputCols.nonEmpty, "woe_binning: no feature columns to fit")
-    val stackExpr = s"stack(${inputCols.length}, " +
-      inputCols.map(c => s"${sqlStr(c)}, cast(${sqlId(c)} as double)").mkString(", ") +
-      ") as (variable, value)"
-    // NaN and NULL are both "missing" (pandas dropna semantics)
-    df.selectExpr(stackExpr,
-        s"cast(${sqlId(targetCol)} as double) as traw")
+    val pairs = inputCols.flatMap(c => Seq(lit(c), colNamed(c).cast("double")))
+    df.select(carry :+ stack(lit(inputCols.length) +: pairs: _*)
+        .as(Seq("variable", "value")): _*)
       .withColumn("value", when(isnan(col("value")), lit(null)).otherwise(col("value")))
-      .groupBy("variable", "value")
-      .agg(
-        count(lit(1)).as("cnt"),
-        // only in-domain values reach the bigint cast: under ANSI mode
-        // (Spark 4 default) cast(NaN/±Infinity as bigint) throws a raw
-        // ArithmeticException at the executor, pre-empting the friendly
-        // 0/1-domain error (tbad below flags everything out-of-domain)
-        sum(when(col("traw") === 0.0 || col("traw") === 1.0, col("traw"))
-          .otherwise(lit(null)).cast("bigint")).as("tsum"),
-        count(col("traw")).as("tcnt"), // non-null targets → null guard
-        // 0/1-domain guard: a fractional or NaN target would silently
-        // truncate under the integer-stats design
-        sum(when(isnan(col("traw")) ||
-            (col("traw") =!= 0.0 && col("traw") =!= 1.0), 1L)
-          .otherwise(0L)).as("tbad"))
   }
 
-  /** One collected stats row: (variable, value, cnt, tsum, tcnt, tbad)
-    * — the tuple form the typed collects below deserialize straight
-    * into (codegen'd encoder, no per-field GenericRow boxing/decode;
-    * r19, VERDICT ask #7: the Row decode cost ~0.3-0.4 s of each
-    * near-unique fit per FitProbe).
+  /** The exact-integer stats per melted group, in the field order
+    * [[statsFromRows]] reads: cnt, tsum, tcnt, tbad.
     */
-  private[graft] type StatsTuple =
-    (String, Option[Double], Long, Option[Long], Long, Long)
+  private val statsAggs: Seq[Column] = Seq(
+    count(lit(1)).as("cnt"),
+    // only in-domain values reach the bigint cast: under ANSI mode
+    // (Spark 4 default) cast(NaN/±Infinity as bigint) throws a raw
+    // ArithmeticException at the executor, pre-empting the friendly
+    // 0/1-domain error (tbad below flags everything out-of-domain)
+    sum(when(col("traw") === 0.0 || col("traw") === 1.0, col("traw"))
+      .otherwise(lit(null)).cast("bigint")).as("tsum"),
+    count(col("traw")).as("tcnt"), // non-null targets → null guard
+    // 0/1-domain guard: a fractional or NaN target would silently
+    // truncate under the integer-stats design
+    sum(when(isnan(col("traw")) ||
+        (col("traw") =!= 0.0 && col("traw") =!= 1.0), 1L)
+      .otherwise(0L)).as("tbad"))
 
-  /** Collected stats rows → per-variable exact sufficient statistics
-    * (Row adapter for ad-hoc callers; the engine's own collects are
-    * typed and go straight to [[statsFromTuples]]).
+  private def target(targetCol: String): Column =
+    colNamed(targetCol).cast("double").as("traw")
+
+  /** The melt + exact-integer stats aggregation, shared by the batch
+    * fit and the streaming incremental fit (StreamingWoe): rows of
+    * (variable, value, cnt, tsum, tcnt, tbad).
+    */
+  def statsAggregation(df: DataFrame, targetCol: String, inputCols: Seq[String]): DataFrame =
+    melt(df, inputCols, target(targetCol))
+      .groupBy("variable", "value")
+      .agg(statsAggs.head, statsAggs.tail: _*)
+
+  /** Collected stats rows → per-variable exact sufficient statistics:
+    * the one decoder of every fit collect (batch, per-segment and
+    * streaming).  It reads fields 0-5 as (variable, value, cnt, tsum,
+    * tcnt, tbad) and ignores any after them, so `fitByGroup`'s rows,
+    * which carry the segment key last, decode the same way.
+    *
+    * The collect is a plain Row collect, decoded straight from the Row
+    * fields in one loop.  A typed tuple collect is no faster: q_fit_exact
+    * at sf0.1 took 2.48-2.73 s typed vs 2.19-2.51 s Row; the MOB
+    * benchmark's fit_unique (4-vCPU VM, seeds 11-14, interleaved) gave
+    * op_p50_s medians of 0.99 s typed vs 1.00 s Row and a traced decode
+    * of 0.64 s vs 0.59 s, with the same bins.
+    *
+    * Fails fast on a target outside the 0/1 domain and on null targets:
+    * a null target would silently vanish from sum(), and a fractional
+    * or NaN target would truncate under the integer-stats design.
     */
   def statsFromRows(rows: Array[Row]): Map[String, Kernels.VarStats] =
-    statsFromTuples(rows.map(r => (
-      r.getString(0),
-      if (r.isNullAt(1)) None else Some(r.getDouble(1)),
-      r.getLong(2),
-      if (r.isNullAt(3)) None else Some(r.getLong(3)),
-      r.getLong(4), r.getLong(5))))
-
-  /** Tuple-typed core of [[statsFromRows]] — fails fast on null target
-    * values: a group whose targets are all null has a NULL sum, and
-    * the reference's 0/1-target contract never allows that.
-    */
-  private[graft] def statsFromTuples(
-      rows: Array[StatsTuple]): Map[String, Kernels.VarStats] =
-    rows.groupBy(_._1).map { case (variable, vr) =>
-      // a null target would silently vanish from sum(), and a
-      // fractional/NaN target would truncate under the integer-stats
-      // design; the reference's 0/1 contract allows neither — fail fast
-      def where(r: StatsTuple) =
-        s"(variable '$variable', value ${r._2.map(_.toString).getOrElse("null")})"
+    rows.groupBy(_.getString(0)).map { case (variable, vr) =>
+      def where(r: Row) =
+        s"(variable '$variable', value ${if (r.isNullAt(1)) "null" else r.getDouble(1)})"
       // single driver pass: domain/null guards, NaN split, tuple build
       // and a sortedness check all fused — a presorted input (ad-hoc
       // callers that ordered upstream) skips the O(n log n) driver sort;
@@ -118,20 +125,22 @@ object WoeBinning {
         val r = vr(i)
         // domain check FIRST: an all-NaN group also has a null tsum (the
         // NaN→null cast guard), and "must be 0/1" is the accurate error
-        if (r._6 > 0)
+        if (r.getLong(5) > 0)
           throw new IllegalArgumentException(
             s"woe_binning: target must be 0/1 ${where(r)}")
-        if (r._4.isEmpty || r._5 != r._3)
+        val cnt = r.getLong(2)
+        if (r.isNullAt(3) || r.getLong(4) != cnt)
           throw new IllegalArgumentException(
             s"woe_binning: target contains nulls ${where(r)}")
-        if (r._2.isEmpty) {
-          nanCount += r._3; nanTsum += r._4.get
+        val tsum = r.getLong(3)
+        if (r.isNullAt(1)) {
+          nanCount += cnt; nanTsum += tsum
         } else {
-          val v = r._2.get
+          val v = r.getDouble(1)
           if (v < prev) presorted = false
           prev = v
-          groupsB += ((v, r._3, r._4.get))
-          valCnt += r._3; valTsum += r._4.get
+          groupsB += ((v, cnt, tsum))
+          valCnt += cnt; valTsum += tsum
         }
         i += 1
       }
@@ -168,13 +177,8 @@ object WoeBinning {
     // range-sort exchange added 0.55-0.9 s to the agg+collect while the
     // driver fallback sort in statsFromRows costs ~0.3 s — the cluster
     // sort pays a full extra shuffle of the O(distinct) rows (sampling +
-    // range exchange) to save a cheaper in-memory sort.  The collect is
-    // TYPED (r19): the tuple encoder deserializes straight to primitives
-    // instead of a GenericRow per stats row.  Same stats either way, so
-    // the fit is bit-identical.
-    import df.sparkSession.implicits._
-    statsFromTuples(
-      statsAggregation(base, targetCol, inputCols).as[StatsTuple].collect())
+    // range exchange) to save a cheaper in-memory sort
+    statsFromRows(statsAggregation(base, targetCol, inputCols).collect())
   }
 
   /** One variable's bins from its collected stats — the per-variable
@@ -216,7 +220,7 @@ object WoeBinning {
     // scale valve's hot path; SnapToEdgeSpec pins bucket-for-bucket
     // equivalence against the Bucketizer
     df.withColumn(c,
-      graft.functions.SnapToEdge(col(c).cast("double"), es.toArray))
+      graft.functions.SnapToEdge(colNamed(c).cast("double"), es.toArray))
   }
 
   /** Quantile pre-binning for the distinct-value-explosion scale path:
@@ -241,27 +245,40 @@ object WoeBinning {
       df: DataFrame,
       targetCol: String,
       inputCols: Seq[String],
-      opts: WoeFitOptions = WoeFitOptions()): WoeBinningModel = {
-    val stats = sufficientStats(df, targetCol, inputCols, opts.maxDistinct)
+      opts: WoeFitOptions = WoeFitOptions()): WoeBinningModel =
+    modelFromStats(sufficientStats(df, targetCol, inputCols, opts.maxDistinct),
+      targetCol, inputCols, opts, Some(df.queryExecution.analyzed))
+
+  /** Stats → model, shared by [[fit]], [[fitByGroup]] and the streaming
+    * refit: the default `nThreshold = ceil(N/20)` (binning.py:84-87),
+    * the per-variable kernels in a parallel collection, and the fit
+    * medians.
+    *
+    * The per-(variable, value) counts the fit just collected ARE the
+    * grouped stats `transform`'s exact medians need — precompute them
+    * driver-side (O(distinct), zero extra jobs) so a fit-then-apply on
+    * the SAME DataFrame (the dominant workflow) scans the data once.
+    * Skipped without a fit plan (nothing to match the apply frame
+    * against) and under maxDistinct: pre-binned values would yield
+    * snapped medians, not the apply dataset's true ones.
+    */
+  private[graft] def modelFromStats(
+      stats: Map[String, Kernels.VarStats],
+      targetCol: String,
+      inputCols: Seq[String],
+      opts: WoeFitOptions,
+      fitPlan: Option[LogicalPlan]): WoeBinningModel = {
     val n = stats.valuesIterator.map(_.totalRows).maxOption.getOrElse(0L)
-    val nThr = opts.nThreshold.getOrElse(math.ceil(n.toDouble / 20.0))
-    val cfg = WoeConfig(nThr, opts.nOccurrences, opts.pThreshold,
-      opts.sortOverload, opts.mergeThreshold)
+    val cfg = WoeConfig(opts.nThreshold.getOrElse(math.ceil(n.toDouble / 20.0)),
+      opts.nOccurrences, opts.pThreshold, opts.sortOverload, opts.mergeThreshold)
     val fitted: Seq[(String, Vector[WoeBin])] =
       inputCols.par
         .map(c => c -> fitOne(c, targetCol, stats, cfg, opts.sepValue))
         .seq.toVector
-    // the per-(variable, value) counts the fit just collected ARE the
-    // grouped stats `transform`'s exact medians need — precompute them
-    // driver-side (O(distinct), zero extra jobs) so a fit-then-apply on
-    // the SAME DataFrame (the dominant workflow) scans the data once.
-    // Skipped under maxDistinct: pre-binned values would yield snapped
-    // medians, not the apply dataset's true ones.
     val fitMedians: Map[String, Double] =
-      if (opts.maxDistinct.isDefined) Map.empty
+      if (fitPlan.isEmpty || opts.maxDistinct.isDefined) Map.empty
       else stats.map { case (v, s) => v -> Kernels.exactMedian(s.groups) }
-    new WoeBinningModel(fitted, fitMedians,
-      Some(df.queryExecution.analyzed))
+    new WoeBinningModel(fitted, fitMedians, fitPlan)
   }
 
   /** Per-segment fit: an independent model per distinct value of
@@ -289,52 +306,21 @@ object WoeBinning {
       groupCol: String,
       opts: WoeFitOptions = WoeFitOptions()): Seq[(String, WoeBinningModel)] = {
     val base = opts.maxDistinct.map(m => preBin(df, inputCols, m)).getOrElse(df)
-    val stackExpr = s"stack(${inputCols.length}, " +
-      inputCols.map(c => s"${sqlStr(c)}, cast(${sqlId(c)} as double)").mkString(", ") +
-      ") as (variable, value)"
-    import df.sparkSession.implicits._
-    val grouped = base
-      .selectExpr(s"cast(${sqlId(groupCol)} as string) as grp", stackExpr,
-        s"cast(${sqlId(targetCol)} as double) as traw")
-      .where(col("grp").isNotNull)
-      .withColumn("value", when(isnan(col("value")), lit(null)).otherwise(col("value")))
-      .groupBy("grp", "variable", "value")
-      .agg(
-        count(lit(1)).as("cnt"),
-        sum(when(col("traw") === 0.0 || col("traw") === 1.0, col("traw"))
-          .otherwise(lit(null)).cast("bigint")).as("tsum"),
-        count(col("traw")).as("tcnt"),
-        sum(when(isnan(col("traw")) ||
-            (col("traw") =!= 0.0 && col("traw") =!= 1.0), 1L)
-          .otherwise(0L)).as("tbad"))
-      // typed + unsorted: statsFromTuples' driver sort (see
-      // sufficientStats) — the keyed range-sort exchange costs more
-      // than sorting the O(distinct) rows in memory
-      .as[(String, String, Option[Double], Long, Option[Long], Long, Long)]
+    val grp = colNamed(groupCol).cast("string")
+    // the segment key goes AFTER the six stats fields, so statsFromRows
+    // decodes these rows as they are (unsorted, like sufficientStats)
+    val grouped = melt(base.where(grp.isNotNull), inputCols, target(targetCol), grp.as("grp"))
+      .groupBy("variable", "value", "grp")
+      .agg(statsAggs.head, statsAggs.tail: _*)
+      .select("variable", "value", "cnt", "tsum", "tcnt", "tbad", "grp")
       .collect()
-    grouped.groupBy(_._1).toSeq.sortBy(_._1).map { case (g, rows) =>
-      // strip the segment key → the exact tuple shape statsFromTuples
-      // consumes; it sorts each variable's values itself
-      val stats = statsFromTuples(rows.map(t =>
-        (t._2, t._3, t._4, t._5, t._6, t._7)))
-      val n = stats.valuesIterator.map(_.totalRows).maxOption.getOrElse(0L)
-      val nThr = opts.nThreshold.getOrElse(math.ceil(n.toDouble / 20.0))
-      val cfg = WoeConfig(nThr, opts.nOccurrences, opts.pThreshold,
-        opts.sortOverload, opts.mergeThreshold)
-      val fitted: Seq[(String, Vector[WoeBin])] =
-        inputCols.par
-          .map(c => c -> fitOne(c, targetCol, stats, cfg, opts.sepValue))
-          .seq.toVector
-      val fitMedians: Map[String, Double] =
-        if (opts.maxDistinct.isDefined) Map.empty
-        else stats.map { case (v, s) => v -> Kernels.exactMedian(s.groups) }
+    grouped.groupBy(_.getString(6)).toSeq.sortBy(_._1).map { case (g, rows) =>
       // fit plan of the EQUIVALENT manual workflow: transform on
       // df.filter(groupCol === g) reuses the precomputed medians
       val gPlan =
-        try Some(df.filter(col(groupCol).cast("string") === g)
-          .queryExecution.analyzed)
+        try Some(df.filter(grp === g).queryExecution.analyzed)
         catch { case scala.util.control.NonFatal(_) => None }
-      g -> new WoeBinningModel(fitted, fitMedians, gPlan)
+      g -> modelFromStats(statsFromRows(rows), targetCol, inputCols, opts, gPlan)
     }
   }
 
@@ -368,29 +354,23 @@ object WoeBinning {
 
   /** Exact interpolated medians (pandas `Series.median`,
     * binning.py:297/302) for several columns in ONE distributed job:
-    * melt → per-value counts → Spark-side sort → driver interpolation
-    * over the grouped counts.  A column with no non-missing values maps
-    * to NaN.
+    * melt → per-value counts → unsorted collect → driver sort and
+    * interpolation over the grouped counts.  A column with no
+    * non-missing values maps to NaN.
     */
   def exactMedians(df: DataFrame, cols: Seq[String]): Map[String, Double] = {
-    val stackExpr = s"stack(${cols.length}, " +
-      cols.map(c => s"${sqlStr(c)}, cast(${sqlId(c)} as double)").mkString(", ") +
-      ") as (variable, value)"
-    import df.sparkSession.implicits._
-    val grouped = df.selectExpr(stackExpr)
-      .where(col("value").isNotNull && !isnan(col("value")))
+    val byVar = melt(df, cols)
+      .where(col("value").isNotNull)
       .groupBy("variable", "value")
       .agg(count(lit(1)).as("cnt"))
-      // typed + unsorted collect + driver sort (see sufficientStats)
-      .as[(String, Double, Long)]
       .collect()
-    val byVar = grouped.groupBy(_._1)
+      .groupBy(_.getString(0))
     cols.map { c =>
       c -> byVar.get(c).fold(Double.NaN) { rows =>
         // exactMedian walks groups in ascending-value order; values are
         // unique per variable after the groupBy so this sort is total
         Kernels.exactMedian(
-          rows.iterator.map(t => (t._2, t._3, 0L))
+          rows.iterator.map(r => (r.getDouble(1), r.getLong(2), 0L))
             .toVector.sortBy(_._1))
       }
     }.toMap
@@ -437,10 +417,13 @@ object WoeBinning {
 final class WoeBinningModel(
     val fitted: Seq[(String, Vector[WoeBin])],
     fitMedians: Map[String, Double] = Map.empty,
-    fitPlan: Option[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan] = None) {
+    fitPlan: Option[LogicalPlan] = None) {
 
   def bins(variable: String): Vector[WoeBin] =
-    fitted.collectFirst { case (v, b) if v == variable => b }.get
+    fitted.collectFirst { case (v, b) if v == variable => b }.getOrElse(
+      throw new NoSuchElementException(
+        s"WoeBinningModel.bins: no fitted variable '$variable' " +
+          s"(fitted: ${fitted.map(_._1).mkString("'", "', '", "'")})"))
 
   /** Stacked bins DataFrame in the reference's 11-column schema. */
   def binsDf(spark: SparkSession): DataFrame = {
@@ -545,7 +528,7 @@ final class WoeBinningModel(
     val rightClosed = cuts.head > cuts.last
     if (rightClosed) { cuts = cuts.reverse; labels = labels.reverse }
     // NaN → null → median; then bucket via the interval chain
-    val raw = col(variable).cast(DoubleType)
+    val raw = WoeBinning.colNamed(variable).cast(DoubleType)
     val base = coalesce(when(isnan(raw), lit(null)).otherwise(raw), lit(med))
     val chain = labels.indices.dropRight(1).foldLeft(Option.empty[Column]) {
       case (acc, k) =>

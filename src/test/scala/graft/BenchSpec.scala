@@ -38,6 +38,18 @@ class BenchSpec extends AnyFunSuite {
     assert(Bench.stealJiffies() >= -1L)
   }
 
+  test("shownPrefix: the contended list stops at the first name over budget") {
+    // brackets + (name + quotes + comma) per name: "aaaa" costs 7
+    val names = Seq("aaaa", "bbbbbbbbbbbbbbbbbbbb", "cc", "dd")
+    assert(Bench.shownPrefix(names, 9) == Seq("aaaa"))
+    // "cc" alone would still fit, but it is not in the slowest-first prefix
+    assert(Bench.shownPrefix(names, 20) == Seq("aaaa"))
+    assert(Bench.shownPrefix(names, 32) == Seq("aaaa", "bbbbbbbbbbbbbbbbbbbb"))
+    assert(Bench.shownPrefix(names, 42) == names)
+    assert(Bench.shownPrefix(names, 1).isEmpty)
+    assert(Bench.shownPrefix(Nil, 400).isEmpty)
+  }
+
   test("pageRankLongKernel: 1 M edges (the collectThreshold) stays in kernel range") {
     // the driver fast path's worst legal input: exactly the 1 M-edge
     // adaptive threshold, ~180 k distinct nodes, heavy key reuse —
